@@ -21,7 +21,7 @@ Reference contract (paths relative to
 | ``load``       | ``tdb/tdbloader.java`` | bulk-load RDF into a parquet store directory |
 | ``dumpthrift`` | ``riotcmd/dumpthrift.java`` | decode RDF-Thrift to N-Triples/N-Quads text |
 | ``tokens``     | ``riotcmd/printtokens.java`` | print the Turtle lexer token stream |
-| ``tdbcompact`` | ``tdb2/tdbcompact.java`` | delete non-current version dirs of a store |
+| ``tdbcompact`` | ``tdb2/tdbcompact.java`` | expire every snapshot of a store but the head |
 | ``shacl --parse`` | ``shacl/shacl_parse.java`` | print the compiled shape set |
 | ``version``    | ``jena/version.java`` | print the engine version |
 
@@ -416,31 +416,18 @@ def _cmd_tokens(args) -> int:
 
 def _cmd_tdbcompact(args) -> int:
     """``tdb2/tdbcompact.java`` — reclaim space in a versioned store:
-    delete every ``v<N>`` version directory except the one the
-    ``_CURRENT`` pointer names (TDB2 compaction keeps only the live
-    generation; our MVCC store's version dirs are its generations).
-    Readers of the live version are unaffected — the pointer is never
-    touched, so a crash mid-compact only leaves garbage versions, a
-    re-run finishes the job."""
-    import os
-    import shutil
+    expire every snapshot but the head and delete the data dirs only
+    expired ones listed (TDB2 compaction keeps only the live
+    generation; :mod:`jena_spark.snapshots`). Readers of the head are
+    unaffected, and a crash mid-compact only leaves garbage dirs."""
+    from jena_spark.snapshots import SnapshotStore
 
-    from jena_spark.streaming.ingest import CURRENT
-
-    loc = args.location
-    ptr = os.path.join(loc, CURRENT)
-    if not os.path.exists(ptr):
-        raise SystemExit(f"tdbcompact: no {CURRENT} pointer in {loc}")
-    with open(ptr) as fh:
-        live = fh.read().strip()
-    removed = []
-    for name in sorted(os.listdir(loc)):
-        full = os.path.join(loc, name)
-        if (name != live and name.startswith("v") and name[1:].isdigit()
-                and os.path.isdir(full)):
-            shutil.rmtree(full)
-            removed.append(name)
-    print(f"live: {live}")
+    store = SnapshotStore(args.location)
+    head = store.head()
+    if head is None:
+        raise SystemExit(f"tdbcompact: no committed snapshot in {args.location}")
+    removed = store.expire(keep=1)
+    print(f"live: {head['snapshot_id']}")
     print(f"removed: {len(removed)}")
     return 0
 
@@ -986,7 +973,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.set_defaults(fn=_cmd_tokens)
 
     p = sub.add_parser("tdbcompact",
-                       help="drop non-current version dirs of a store")
+                       help="expire every snapshot of a store but the head")
     p.add_argument("--location", required=True)
     p.set_defaults(fn=_cmd_tdbcompact)
 

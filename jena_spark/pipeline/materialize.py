@@ -22,12 +22,14 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jena_spark import snapshots
 from jena_spark.terms import TERM_COLS
 
 MANIFEST = "_lineage_manifest.json"
@@ -84,10 +86,8 @@ def read_manifest(out_path: str) -> dict | None:
 
 def write_manifest(out_path: str, manifest: dict) -> None:
     os.makedirs(out_path, exist_ok=True)
-    tmp = _manifest_path(out_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, _manifest_path(out_path))
+    snapshots.atomic_write(_manifest_path(out_path),
+                           json.dumps(manifest, indent=1, sort_keys=True))
 
 
 def write_stage(
@@ -104,11 +104,20 @@ def write_stage(
     path) — the filter happens BEFORE the heavy plan runs, so pruning
     is real, not post-hoc. The heavy plan executes exactly once (the
     write); per-bucket counters are read back from the committed
-    parquet footers, which is a metadata-only scan. Spark's output
-    committer publishes files only on job commit, so a crashed write
-    leaves no committed rows and the manifest stays behind — re-running
-    is safe (exactly-once per bucket).
+    parquet footers, which is a metadata-only scan.
+
+    The manifest is the commit record: a bucket dir it does not list
+    is garbage (the :mod:`jena_spark.snapshots` rule). Spark's output
+    committer publishes files only on job commit, but a crash after
+    that and before the manifest write leaves committed rows the
+    manifest does not list — so the write first deletes every unlisted
+    ``part_id=`` dir, and a re-run never counts a bucket twice.
     """
+    prev = read_manifest(out_path)
+    listed = set(prev["completed"]) if prev else set()
+    for name in os.listdir(out_path) if os.path.isdir(out_path) else []:
+        if name.startswith("part_id=") and int(name.split("=", 1)[1]) not in listed:
+            shutil.rmtree(os.path.join(out_path, name))
     t0 = time.time()
     bucketed = with_bucket(df, n_buckets, key=key)
     if only_buckets is not None:
@@ -125,7 +134,7 @@ def write_stage(
 
     per_part = _footer_counts(out_path, only_buckets)
 
-    prev = read_manifest(out_path) or {
+    prev = prev or {
         "stage": stage, "n_buckets": n_buckets, "completed": [], "rows_per_bucket": {},
         "counters": {"rows_out": 0, "wall_sec": 0.0},
     }

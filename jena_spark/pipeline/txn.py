@@ -21,10 +21,9 @@ page states; here a committed version IS an immutable DataFrame plan
   frame — nothing is visible until commit;
 * ``commit()`` is an atomic pointer swap: the in-memory current
   version rebinds under the coordinator lock, and a durable store
-  additionally writes a fresh ``v{n}`` parquet directory and swaps the
-  ``_CURRENT`` pointer file (the same crash-safe pointer protocol the
-  streaming canonical-maintenance loop uses —
-  ``streaming/ingest.py:apply_canonical_batch``).
+  additionally commits the version as a snapshot
+  (:mod:`jena_spark.snapshots` — the protocol shared with the
+  streaming folds and the lite Iceberg table).
 
 Coordination scope: like Jena's in-process ``TransactionCoordinator``
 this serializes writers within ONE driver (``threading.Lock``).
@@ -35,12 +34,12 @@ honestly rather than faked.
 
 from __future__ import annotations
 
-import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
 from jena_spark.pipeline.api import Connection
+from jena_spark.snapshots import SnapshotStore
 
 READ = "read"
 WRITE = "write"
@@ -150,8 +149,8 @@ class Transaction:
 class TransactionalStore:
     """MRSW transactional quad store (``TransactionCoordinator``
     analog). ``path=None`` keeps versions as in-memory DataFrame
-    plans; a path makes commits durable (parquet version directories
-    + the atomic ``_CURRENT`` pointer)."""
+    plans; a path makes commits durable (one snapshot per commit,
+    :class:`jena_spark.snapshots.SnapshotStore`)."""
 
     def __init__(self, spark: SparkSession,
                  quads: DataFrame | None = None,
@@ -161,13 +160,11 @@ class TransactionalStore:
         self._lock = threading.Lock()        # guards pointer + writer slot
         self._writer: Transaction | None = None
         self._version = 0
-        if path is not None:
-            from jena_spark.streaming.ingest import read_current_snapshot
-
-            snap = read_current_snapshot(spark, path)
-            if snap is not None:
-                quads = snap
-                self._version = self._read_version_number()
+        self._snapshots = None if path is None else SnapshotStore(path)
+        head = self._snapshots and self._snapshots.head()
+        if head is not None:
+            quads = self._snapshots.read(spark)
+            self._version = head["seq"]
         self._current = Connection(spark, quads).quads
 
     # --- Transactional ------------------------------------------------------
@@ -223,36 +220,20 @@ class TransactionalStore:
         return out
 
     # --- internal -----------------------------------------------------------
-    def _read_version_number(self) -> int:
-        from jena_spark.streaming.ingest import CURRENT
-
-        ptr = os.path.join(self.path, CURRENT)
-        if not os.path.exists(ptr):
-            return 0
-        with open(ptr) as f:
-            name = f.read().strip()
-        return int(name[1:]) if name.startswith("v") else 0
-
     def _install(self, quads: DataFrame) -> None:
-        from jena_spark.streaming.ingest import _commit_pointer
-
         with self._lock:
-            new_version = self._version + 1
-            if self.path is not None:
-                # durable commit: write the new version directory first,
-                # swap the pointer last (crash between the two leaves the
-                # old version live — the streaming loop's protocol)
-                vdir = os.path.join(self.path, f"v{new_version}")
-                quads.write.mode("overwrite").parquet(vdir)
-                _commit_pointer(self.path, f"v{new_version}")
-                self._current = self.spark.read.parquet(vdir)
+            if self._snapshots is not None:
+                # durable commit: a crash before the head swap leaves the
+                # old version live
+                self._snapshots.commit("commit", quads)
+                self._current = self._snapshots.read(self.spark)
             else:
                 # cut lineage per commit: without this, each version's
                 # plan nests the previous version's unions/anti-joins
                 # and a long-lived store pays unbounded analysis cost
                 # (the durable path cuts it by re-reading parquet)
                 self._current = quads.localCheckpoint(eager=False)
-            self._version = new_version
+            self._version += 1
 
     def _release_writer(self, txn: Transaction) -> None:
         with self._lock:

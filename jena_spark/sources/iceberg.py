@@ -11,40 +11,22 @@ metadata-level file pruning.
 
 The fallback is no longer a bare ``mode("append")`` parquet dir:
 :class:`IcebergLiteTable` reproduces Iceberg's ARCHITECTURE at the
-metadata level so the API surface has real behavior to test against —
-
-* **immutable data files + manifest**: each commit writes its data
-  under ``data/<snapshot_id>/`` and appends a manifest entry listing
-  the snapshot's FULL file set (an append lists the parent's files
-  plus its own — old data is never rewritten, exactly Iceberg's
-  manifest-list reuse);
-* **snapshot log + current pointer**: ``_snapshots.json`` is the
-  table metadata (snapshot id, parent, operation, file list) and
-  ``_CURRENT`` the atomic head pointer (write-tmp + rename, the same
-  crash-safe pointer protocol as ``pipeline/txn.py``) — a reader
-  that opens the table mid-commit sees the previous snapshot,
-  i.e. snapshot isolation;
-* **time travel**: ``read(snapshot_id=...)`` / ``VERSION AS OF``
-  semantics — any retained snapshot re-reads its exact file set
-  (the resume posture the north rule asks for);
-* **merge**: ``merge(updates, key)`` = MERGE INTO as a new overwrite
-  snapshot (upsert by key), the row-level-operation analog;
-* **expire_snapshots**: drops unreferenced data dirs, keeping the
-  current chain — the maintenance op.
-
-Snapshot ids are md5 content hashes of (parent, operation, files) —
-the repo's determinism rule (no uuid/now in pipeline paths); travel
-is by snapshot id, not wall timestamp, for the same reason.
+metadata level so the API surface has real behavior to test against.
+Commits, snapshot isolation, time travel by deterministic snapshot id
+and expire are :mod:`jena_spark.snapshots`' protocol; an append's
+snapshot lists its parent's data dirs plus its own (Iceberg's
+manifest-list reuse — old data is never rewritten), and ``merge`` is
+MERGE INTO as a copy-on-write overwrite snapshot.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
+import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from jena_spark.snapshots import LOG, SnapshotStore
 
 ICEBERG_CONFS = {
     # documented deployment configs (need iceberg-spark-runtime on the CP)
@@ -66,16 +48,20 @@ def iceberg_available(spark: SparkSession) -> bool:
 def read_table(spark: SparkSession, identifier: str,
                snapshot_id: str | None = None) -> DataFrame:
     """``kg.db.table`` via the Iceberg catalog when present, else an
-    :class:`IcebergLiteTable` directory (detected by its manifest) or
-    a plain parquet path. ``snapshot_id`` = ``VERSION AS OF`` time
+    :class:`IcebergLiteTable` directory (detected by its snapshot log)
+    or a plain parquet path. ``snapshot_id`` = ``VERSION AS OF`` time
     travel on either real Iceberg or the lite table."""
     if iceberg_available(spark) and not identifier.startswith("/"):
         r = spark.read.format("iceberg")
         if snapshot_id is not None:
             r = r.option("snapshot-id", snapshot_id)
         return r.load(identifier)
-    if os.path.exists(os.path.join(identifier, IcebergLiteTable.MANIFEST)):
-        return IcebergLiteTable(spark, identifier).read(snapshot_id)
+    if os.path.exists(os.path.join(identifier, LOG)):
+        df = IcebergLiteTable(spark, identifier).read(snapshot_id)
+        if df is None:
+            raise ValueError(f"{identifier}: lite Iceberg table has no "
+                             "committed snapshot")
+        return df
     if snapshot_id is not None:
         raise ValueError(
             "snapshot_id given but the path is a plain parquet dir "
@@ -93,90 +79,40 @@ def append_table(df: DataFrame, identifier: str) -> None:
 # --- snapshot-isolated parquet fallback (Iceberg metadata emulation) -------
 
 class IcebergLiteTable:
-    """Manifest-based snapshot table over plain parquet (module
-    docstring for the architecture). All metadata operations are
-    driver-side file writes; data reads/writes are fully distributed
-    (``spark.read.parquet`` over the snapshot's file-dir list)."""
-
-    MANIFEST = "_snapshots.json"
-    CURRENT = "_CURRENT"
+    """Snapshot table over plain parquet (module docstring). Metadata
+    operations are driver-side file writes; data reads/writes are fully
+    distributed (``spark.read.parquet`` over the snapshot's dir list)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path.rstrip("/")
-        os.makedirs(self.path, exist_ok=True)
-
-    # -- metadata ---------------------------------------------------------
-
-    def _manifest(self) -> list[dict]:
-        p = os.path.join(self.path, self.MANIFEST)
-        if not os.path.exists(p):
-            return []
-        with open(p, encoding="utf-8") as f:
-            return json.load(f)
+        self.store = SnapshotStore(self.path)
+        if (not os.path.exists(os.path.join(self.path, LOG))
+                and glob.glob(os.path.join(self.path, "part-*"))):
+            raise ValueError(
+                f"{self.path} holds plain parquet files and no snapshot "
+                "log; a snapshot would hide them")
 
     def current_snapshot(self) -> str | None:
-        p = os.path.join(self.path, self.CURRENT)
-        if not os.path.exists(p):
-            return None
-        with open(p, encoding="utf-8") as f:
-            return f.read().strip() or None
+        head = self.store.head()
+        return head and head["snapshot_id"]
 
     def snapshots(self) -> list[dict]:
         """The snapshot log (id, parent, operation, file count) —
         ``table.snapshots()`` / the ``snapshots`` metadata table."""
         return [{"snapshot_id": s["snapshot_id"], "parent": s["parent"],
                  "operation": s["operation"], "n_dirs": len(s["files"])}
-                for s in self._manifest()]
-
-    def _entry(self, snapshot_id: str) -> dict:
-        for s in self._manifest():
-            if s["snapshot_id"] == snapshot_id:
-                return s
-        raise KeyError(f"no such snapshot {snapshot_id!r}")
-
-    def _atomic_write(self, name: str, text: str) -> None:
-        tmp = os.path.join(self.path, name + ".tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(text)
-        os.replace(tmp, os.path.join(self.path, name))
-
-    def _commit(self, operation: str, files: list[str]) -> str:
-        parent = self.current_snapshot()
-        sid = hashlib.md5(json.dumps(
-            [parent, operation, sorted(files)]).encode()).hexdigest()[:16]
-        log = self._manifest()
-        log.append({"snapshot_id": sid, "parent": parent,
-                    "operation": operation, "files": sorted(files)})
-        # order matters for crash safety: data files already exist,
-        # manifest next, head pointer LAST — a reader interleaved at
-        # any point sees a complete previous snapshot
-        self._atomic_write(self.MANIFEST, json.dumps(log, indent=1))
-        self._atomic_write(self.CURRENT, sid)
-        return sid
-
-    def _write_data(self, df: DataFrame, tag: str) -> str:
-        rel = f"data/{tag}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, rel))
-        return rel
-
-    # -- operations -------------------------------------------------------
+                for s in self.store.log()]
 
     def overwrite(self, df: DataFrame) -> str:
         """Replace the table contents (``writeTo(...).createOrReplace``
         / ``INSERT OVERWRITE``). Returns the new snapshot id."""
-        n = len(self._manifest())
-        rel = self._write_data(df, f"s{n}")
-        return self._commit("overwrite", [rel])
+        return self.store.commit("overwrite", df)
 
     def append(self, df: DataFrame) -> str:
         """ACID append: new files only; the snapshot's file set is the
         parent's plus this commit's (no rewrite of old data)."""
-        parent = self.current_snapshot()
-        base = self._entry(parent)["files"] if parent else []
-        n = len(self._manifest())
-        rel = self._write_data(df, f"s{n}")
-        return self._commit("append", base + [rel])
+        return self.store.commit("append", df, inherit=True)
 
     def merge(self, updates: DataFrame, key: str | list[str]) -> str:
         """MERGE INTO by key (upsert: matched rows replaced, unmatched
@@ -188,36 +124,15 @@ class IcebergLiteTable:
         kept = cur.join(updates.select(*keys).distinct(), keys,
                         "left_anti") if cur is not None else None
         merged = updates if kept is None else kept.unionByName(updates)
-        n = len(self._manifest())
-        rel = self._write_data(merged, f"s{n}")
-        return self._commit("merge", [rel])
+        return self.store.commit("merge", merged)
 
     def read(self, snapshot_id: str | None = None) -> DataFrame | None:
         """Current table, or ``VERSION AS OF snapshot_id`` time
         travel. None for an empty (never-committed) table."""
-        sid = snapshot_id or self.current_snapshot()
-        if sid is None:
-            return None
-        files = self._entry(sid)["files"]
-        return self.spark.read.parquet(
-            *[os.path.join(self.path, f) for f in files])
+        return self.store.read(self.spark, snapshot_id)
 
     def expire_snapshots(self, keep: int = 1) -> list[str]:
         """Drop all but the last ``keep`` snapshots and delete data
         dirs no retained snapshot references (``expireSnapshots``).
         Returns the expired snapshot ids."""
-        if keep < 1:
-            raise ValueError(f"keep must be >= 1, got {keep}")
-        log = self._manifest()
-        if len(log) <= keep:
-            return []
-        kept, gone = log[-keep:], log[:-keep]
-        live = {f for s in kept for f in s["files"]}
-        for s in gone:
-            for f in s["files"]:
-                if f not in live:
-                    shutil.rmtree(os.path.join(self.path, f),
-                                  ignore_errors=True)
-        self._atomic_write(self.MANIFEST, json.dumps(kept, indent=1))
-        self._atomic_write(self.CURRENT, kept[-1]["snapshot_id"])
-        return [s["snapshot_id"] for s in gone]
+        return self.store.expire(keep)

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from jena_spark.pipeline.extract import raw_triples
 from jena_spark.schemas import TRANSCRIPTS_SCHEMA
+from jena_spark.snapshots import SnapshotStore
 
 
 def stream_transcripts(spark: SparkSession, input_path: str) -> DataFrame:
@@ -102,33 +103,6 @@ def stateful_conv_progress(transcripts_stream: DataFrame) -> DataFrame:
 
 # --- streaming canonical maintenance ---------------------------------------
 
-CURRENT = "_CURRENT"
-
-
-def read_current_snapshot(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """The committed canonical snapshot, or None before the first
-    batch. The ``_CURRENT`` pointer file names the live version
-    directory — the poor-man's Iceberg snapshot pointer (atomic via
-    rename), so readers never observe a half-written snapshot."""
-    import os
-
-    ptr = os.path.join(store_path, CURRENT)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        version = f.read().strip()
-    return spark.read.parquet(os.path.join(store_path, version))
-
-
-def _commit_pointer(store_path: str, version: str) -> None:
-    import os
-
-    tmp = os.path.join(store_path, CURRENT + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(version)
-    os.replace(tmp, os.path.join(store_path, CURRENT))
-
-
 def start_canonical_maintenance(
     spark: SparkSession,
     input_path: str,
@@ -145,22 +119,13 @@ def start_canonical_maintenance(
     This is the deployment loop of a continuously-arriving
     10^12-turn corpus: the per-batch cost is the incremental fold
     (pure append when no representative re-election — the common
-    case), never a rebuild. Crash safety: the snapshot is written to
-    a fresh ``v{batch}`` directory and the ``_CURRENT`` pointer swaps
-    atomically AFTER the write. A crash BEFORE the pointer swap leaves
-    the previous snapshot live and the replayed batch rebuilds
-    ``v{batch}`` from it (reads only the older version — safe); a
-    crash AFTER the swap but before the streaming checkpoint commit
-    replays a batch that is already applied — the pointer==version
-    guard below detects that and skips (re-folding would both
-    duplicate the batch and overwrite the directory the fold is
-    reading). The invariant stream-of-folds == one-shot build is
-    asserted in ``tests/test_streaming.py``, including the
-    replay-after-commit case.
+    case), never a rebuild. Each batch commits one snapshot
+    (:mod:`jena_spark.snapshots`), so a crash anywhere leaves the
+    previous snapshot live; :func:`apply_canonical_batch` skips the
+    replay of an epoch that already committed. The invariant
+    stream-of-folds == one-shot build is asserted in
+    ``tests/test_streaming.py``, including the replay-after-commit case.
     """
-    import os
-
-    os.makedirs(store_path, exist_ok=True)
     stream = stream_transcripts(spark, input_path)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -185,36 +150,32 @@ def apply_canonical_batch(
     the replay guard is directly testable). Returns True if the batch
     was applied, False if skipped (empty, or already committed).
 
-    The pointer==version guard is the crash-window defense: a crash
-    AFTER the pointer swap but BEFORE the streaming checkpoint commit
-    makes the engine replay this epoch — re-folding would both
-    duplicate the batch (construct_incremental's append-only contract)
-    and overwrite the very snapshot directory the fold is reading
-    (verified to destroy it). A crash BEFORE the swap is safe without
-    the guard: the pointer still names the older version, and the
-    replay rebuilds ``v{epoch}`` reading only that older snapshot.
+    The replay guard — the head is already this epoch's snapshot — is
+    the crash-window defense: a crash AFTER the head swap but BEFORE
+    the streaming checkpoint commit makes the engine replay this
+    epoch, and re-folding would duplicate the batch
+    (construct_incremental's append-only contract). A crash BEFORE the
+    swap needs no guard: the head still names the older snapshot and
+    the replay recommits from it.
     """
-    import os
-
     from jena_spark.pipeline.canonicalize import (
         construct_canonical,
         construct_incremental,
     )
 
-    if batch_df.isEmpty():
+    store = SnapshotStore(store_path)
+    op = f"fold epoch {epoch_id}"
+    if batch_df.isEmpty() or _applied(store, op):
         return False
-    version = f"v{epoch_id}"
-    ptr = os.path.join(store_path, CURRENT)
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            if f.read().strip() == version:
-                return False  # already applied (replay after commit)
-    cur = read_current_snapshot(spark, store_path)
-    snap = (construct_canonical(batch_df, gazetteer) if cur is None
-            else construct_incremental(cur, batch_df, gazetteer))
-    snap.write.mode("overwrite").parquet(os.path.join(store_path, version))
-    _commit_pointer(store_path, version)
+    cur = store.read(spark)
+    store.commit(op, construct_canonical(batch_df, gazetteer) if cur is None
+                 else construct_incremental(cur, batch_df, gazetteer))
     return True
+
+
+def _applied(store: SnapshotStore, operation: str) -> bool:
+    head = store.head()
+    return head is not None and head["operation"] == operation
 
 
 # --- streaming corpus dedup maintenance --------------------------------------
@@ -237,30 +198,22 @@ def apply_dedup_batch(
     """One fold of :func:`start_dedup_maintenance`: run
     :func:`jena_spark.data.dedup.exact_dedup_incremental` against the
     current hash-store snapshot, append this batch's verdicts under
-    ``verdicts/v{epoch}`` and commit the grown store as ``v{epoch}``.
-    Same crash discipline as :func:`apply_canonical_batch` — fresh
-    version directory, atomic ``_CURRENT`` swap after the write,
-    pointer==version replay guard (a replayed epoch after commit would
-    double-fold the batch AND overwrite the store it reads)."""
+    ``verdicts/v{epoch}`` and commit the grown store as a snapshot.
+    Same crash discipline and replay guard as
+    :func:`apply_canonical_batch`; the verdict dir is keyed by epoch and
+    rewritten whole, so a replay before the commit reproduces it."""
     import os
 
     from jena_spark.data.dedup import exact_dedup_incremental
 
-    if batch_df.isEmpty():
+    store = SnapshotStore(store_path)
+    op = f"dedup epoch {epoch_id}"
+    if batch_df.isEmpty() or _applied(store, op):
         return False
-    version = f"v{epoch_id}"
-    ptr = os.path.join(store_path, CURRENT)
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            if f.read().strip() == version:
-                return False
-    prior = read_current_snapshot(spark, store_path)
-    verdicts, state = exact_dedup_incremental(batch_df, prior)
+    verdicts, state = exact_dedup_incremental(batch_df, store.read(spark))
     verdicts.write.mode("overwrite").parquet(
-        os.path.join(store_path, "verdicts", version))
-    state.write.mode("overwrite").parquet(
-        os.path.join(store_path, version))
-    _commit_pointer(store_path, version)
+        os.path.join(store_path, "verdicts", f"v{epoch_id}"))
+    store.commit(op, state)
     return True
 
 
@@ -280,9 +233,6 @@ def start_dedup_maintenance(
     fold-chain == one-shot invariant carries over from the batch op
     (asserted stream-vs-batch in ``tests/test_streaming.py``).
     Returns the StreamingQuery."""
-    import os
-
-    os.makedirs(store_path, exist_ok=True)
     stream = stream_documents(spark, input_path)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:

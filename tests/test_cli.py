@@ -399,10 +399,11 @@ def test_tokens(capsys, tmp_path):
 
 
 def test_tdbcompact(capsys, spark, tmp_path):
-    """tdb2/tdbcompact.java: only the _CURRENT generation survives."""
+    """tdb2/tdbcompact.java: only the head generation survives."""
     import os
 
     from jena_spark.pipeline.txn import TransactionalStore
+    from jena_spark.snapshots import SnapshotStore
 
     quads = spark.createDataFrame(
         [("iri", "http://e/a", "http://e/p", "literal", "1", None, None,
@@ -417,12 +418,15 @@ def test_tdbcompact(capsys, spark, tmp_path):
     with st.write() as tx:
         tx.update('INSERT DATA { <http://e/b> <http://e/p> "2" }')
         tx.commit()
-    vdirs = sorted(d for d in os.listdir(loc) if d.startswith("v"))
-    assert len(vdirs) == 2
+    log = SnapshotStore(loc).log()
+    assert len(log) == 2
+    old, live = (os.path.join(loc, e["files"][0]) for e in log)
+    assert os.path.isdir(old) and os.path.isdir(live)
     rc, out = _run(capsys, "tdbcompact", "--location", loc)
-    assert rc == 0 and "live: v2" in out and "removed: 1" in out
-    vdirs = sorted(d for d in os.listdir(loc) if d.startswith("v"))
-    assert vdirs == ["v2"]
+    assert rc == 0 and f"live: {log[1]['snapshot_id']}" in out
+    assert "removed: 1" in out
+    assert SnapshotStore(loc).log() == log[1:]
+    assert not os.path.exists(old) and os.path.isdir(live)
     # the store still reads after compaction
     st2 = TransactionalStore(spark, quads=None, path=loc)
     assert st2.dataset().count() == 2

@@ -4,7 +4,6 @@ architecture of the deployment target, testable without the jars."""
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 from pathlib import Path
@@ -37,8 +36,7 @@ def test_append_time_travel_and_manifest_reuse(spark, tmp_path):
     assert sorted(r["k"] for r in t.read(s1).collect()) == [1, 2]
     # append reuses the parent's files (no rewrite): s2 lists s1's
     # data dir plus its own
-    m = {s["snapshot_id"]: s for s in
-         json.load(open(os.path.join(p, t.MANIFEST)))}
+    m = {s["snapshot_id"]: s for s in t.store.log()}
     assert set(m[s1]["files"]) < set(m[s2]["files"])
     # snapshot log shape
     log = t.snapshots()
@@ -66,14 +64,17 @@ def test_merge_upsert(spark, tmp_path):
 def test_expire_snapshots_drops_unreferenced_dirs(spark, tmp_path):
     p = str(tmp_path / "tbl")
     t = IcebergLiteTable(spark, p)
-    t.overwrite(_df(spark, [(1, "a")]))        # s0: data/s0
-    t.overwrite(_df(spark, [(2, "b")]))        # s1: data/s1 (s0 dead)
-    t.append(_df(spark, [(3, "c")]))           # s2: data/s1 + data/s2
+    s0 = t.overwrite(_df(spark, [(1, "a")]))
+    s1 = t.overwrite(_df(spark, [(2, "b")]))   # s0's dir now dead
+    s2 = t.append(_df(spark, [(3, "c")]))      # s1's dir + its own
+    files = {s: t.store.entry(s)["files"] for s in (s0, s1, s2)}
+    assert len(files[s0]) == len(files[s1]) == 1
+    assert files[s2][0] == files[s1][0] and len(files[s2]) == 2
     gone = t.expire_snapshots(keep=1)
-    assert len(gone) == 2
+    assert gone == [s0, s1]
     # s0's dir is unreferenced -> deleted; s1's is still live via s2
-    assert not os.path.exists(os.path.join(p, "data/s0"))
-    assert os.path.exists(os.path.join(p, "data/s1"))
+    assert not os.path.exists(os.path.join(p, files[s0][0]))
+    assert all(os.path.exists(os.path.join(p, f)) for f in files[s2])
     assert sorted(r["k"] for r in t.read().collect()) == [2, 3]
     with pytest.raises(KeyError):
         t.read("definitely-not-a-snapshot")
@@ -101,3 +102,35 @@ def test_deterministic_snapshot_ids(spark, tmp_path):
         ids.append((t.overwrite(_df(spark, [(1, "a")])),
                     t.append(_df(spark, [(2, "b")]))))
     assert ids[0] == ids[1]
+
+
+def test_append_after_expire_keeps_live_data(spark, tmp_path):
+    """Data-dir names survive expire: the append after it must not
+    reuse (and overwrite) a dir the head still reads."""
+    t = IcebergLiteTable(spark, str(tmp_path / "tbl"))
+    t.overwrite(_df(spark, [(1, "a")]))
+    t.overwrite(_df(spark, [(2, "b")]))
+    t.append(_df(spark, [(3, "c")]))
+    t.expire_snapshots(keep=1)
+    t.append(_df(spark, [(4, "d")]))
+    assert sorted(r["k"] for r in t.read().collect()) == [2, 3, 4]
+    files = t.store.head()["files"]
+    assert len(set(files)) == len(files) == 3
+
+
+def test_append_table_refuses_to_hide_plain_parquet(spark, tmp_path):
+    plain = str(tmp_path / "plain")
+    _df(spark, [(9, "z")]).write.parquet(plain)
+    with pytest.raises(ValueError, match="plain parquet"):
+        append_table(_df(spark, [(1, "a")]), plain)
+    assert [r["k"] for r in read_table(spark, plain).collect()] == [9]
+
+
+def test_read_table_without_head_raises(spark, tmp_path):
+    """A snapshot log with no committed head (a first commit that
+    crashed before its head swap) is an error, not ``None``."""
+    p = tmp_path / "tbl"
+    p.mkdir()
+    (p / "_snapshots.json").write_text("[]")
+    with pytest.raises(ValueError, match="no committed snapshot"):
+        read_table(spark, str(p))

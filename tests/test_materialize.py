@@ -137,3 +137,26 @@ def test_encoded_job_disk_roundtrip(spark, transcripts_df, tmp_path):
     M.resume_or_write(triples_enc, f"{out}/triples_enc", "triples_enc", 4,
                       key="conv_id")
     assert M.read_manifest(f"{out}/triples_enc")["counters"]["rows_out"] == before
+
+
+def test_resume_after_crash_before_manifest_counts_once(spark, tmp_path, monkeypatch):
+    """A crash after the Spark write commits but before the manifest is
+    written leaves bucket dirs the manifest does not list; the resume
+    must drop them, not append the buckets a second time."""
+    import pytest
+
+    df = spark.createDataFrame([(f"c{i}", i) for i in range(1000)],
+                               "conv_id string, v long")
+    out = str(tmp_path / "out")
+
+    def crash(*_):
+        raise RuntimeError("crash before the manifest write")
+
+    monkeypatch.setattr(M, "write_manifest", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        M.resume_or_write(df, out, "s", 4)
+    monkeypatch.undo()
+    res = M.resume_or_write(df, out, "s", 4)
+    assert spark.read.parquet(out).count() == 1000
+    assert res.counters["rows_out"] == 1000
+    assert M.read_manifest(out)["completed"] == [0, 1, 2, 3]

@@ -118,13 +118,9 @@ def test_streaming_canonical_maintenance(spark, transcripts_pdf, tmp_path):
     the final committed snapshot must equal construct_canonical over
     everything, and each wave must have produced a new version with
     the _CURRENT pointer advancing."""
-    import os
-
     from jena_spark.pipeline.canonicalize import construct_canonical
-    from jena_spark.streaming.ingest import (
-        read_current_snapshot,
-        start_canonical_maintenance,
-    )
+    from jena_spark.snapshots import SnapshotStore
+    from jena_spark.streaming.ingest import start_canonical_maintenance
 
     tdf, _ = transcripts_pdf
     src = str(tmp_path / "csrc")
@@ -139,11 +135,11 @@ def test_streaming_canonical_maintenance(spark, transcripts_pdf, tmp_path):
         ).write.mode("append").parquet(src)
         q = start_canonical_maintenance(spark, src, store, ckpt)
         q.awaitTermination(180)
-        assert read_current_snapshot(spark, store) is not None
+        assert SnapshotStore(store).read(spark) is not None
 
     got = {
         tuple(r) for r in
-        read_current_snapshot(spark, store).select(*TERM_COLS).collect()
+        SnapshotStore(store).read(spark).select(*TERM_COLS).collect()
     }
     want = {
         tuple(r) for r in
@@ -153,8 +149,7 @@ def test_streaming_canonical_maintenance(spark, transcripts_pdf, tmp_path):
     }
     assert got == want
     # three committed versions exist
-    versions = [d for d in os.listdir(store) if d.startswith("v")]
-    assert len(versions) >= 3
+    assert len(SnapshotStore(store).log()) >= 3
 
 
 def test_canonical_maintenance_replay_after_commit_is_noop(
@@ -166,10 +161,8 @@ def test_canonical_maintenance_replay_after_commit_is_noop(
     one-shot build. Exercised directly through apply_canonical_batch
     (the foreachBatch body)."""
     from jena_spark.pipeline.canonicalize import construct_canonical
-    from jena_spark.streaming.ingest import (
-        apply_canonical_batch,
-        read_current_snapshot,
-    )
+    from jena_spark.snapshots import SnapshotStore
+    from jena_spark.streaming.ingest import apply_canonical_batch
 
     tdf, _ = transcripts_pdf
     store = str(tmp_path / "rstore")
@@ -185,13 +178,13 @@ def test_canonical_maintenance_replay_after_commit_is_noop(
 
     before = {
         tuple(r) for r in
-        read_current_snapshot(spark, store).select(*TERM_COLS).collect()
+        SnapshotStore(store).read(spark).select(*TERM_COLS).collect()
     }
     # the crash-window replay: same epoch id again -> guard must skip
     assert apply_canonical_batch(spark, frames[1], 1, store) is False
     after = {
         tuple(r) for r in
-        read_current_snapshot(spark, store).select(*TERM_COLS).collect()
+        SnapshotStore(store).read(spark).select(*TERM_COLS).collect()
     }
     want = {
         tuple(r) for r in construct_canonical(
@@ -207,8 +200,8 @@ def test_canonical_maintenance_replay_after_commit_is_noop(
 def test_streaming_dedup_maintenance_matches_batch_fold(spark, tmp_path):
     """Stream of document batches folded through the hash store ==
     the batch fold chain == keep-first over arrival order."""
+    from jena_spark.snapshots import SnapshotStore
     from jena_spark.streaming.ingest import (
-        read_current_snapshot,
         read_verdicts,
         start_dedup_maintenance,
     )
@@ -240,5 +233,5 @@ def test_streaming_dedup_maintenance_matches_batch_fold(spark, tmp_path):
     }
     # the committed store holds one rep per distinct text ever seen
     state = {r["rep_id"] for r in
-             read_current_snapshot(spark, store).collect()}
+             SnapshotStore(store).read(spark).collect()}
     assert state == {0, 1, 11}
